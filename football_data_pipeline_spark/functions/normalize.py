@@ -12,8 +12,9 @@ whole-stage codegen (regexp_replace + translate, no UDF). Identity
 rules in the reference table (Real→Real, City→City, …) are no-ops and
 are omitted.
 
-Both a Column builder and a DuckDB-SQL builder live here so engine
-and oracle share one rule source — drift between them is impossible.
+A Column builder, a Spark-SQL text builder and a DuckDB-SQL builder
+live here, all generated from the same tables, so engine and oracle
+share one rule source — drift between them is impossible.
 """
 
 from __future__ import annotations
@@ -44,6 +45,9 @@ ACCENT_FROM = "éèêëáàâãäíìîïóòôõöúùûüçñ"
 ACCENT_TO = "eeee" + "aaaaa" + "iiii" + "ooooo" + "uuuu" + "c" + "n"
 assert len(ACCENT_FROM) == len(ACCENT_TO)
 
+#: runs of whitespace collapse to one space
+WHITESPACE = r"\s+"
+
 
 def normalize_name(col: Column | str) -> Column:
     """Spark column expression for the full normalization chain."""
@@ -51,7 +55,23 @@ def normalize_name(col: Column | str) -> Column:
     for pat, rep in TOKEN_RULES:
         x = F.regexp_replace(x, pat, rep)
     x = F.translate(x, ACCENT_FROM, ACCENT_TO)
-    return F.trim(F.regexp_replace(x, r"\s+", " "))
+    return F.trim(F.regexp_replace(x, WHITESPACE, " "))
+
+
+def sql_normalize(expr: str) -> str:
+    r"""The identical chain as Spark SQL text, for statements issued
+    through ``spark.sql``. The SQL parser unescapes backslashes in
+    string literals, so each one in a pattern is doubled (``\\b`` in
+    the text reaches the regex engine as ``\b``)."""
+
+    def lit(pattern: str) -> str:
+        return "'" + pattern.replace("\\", "\\\\") + "'"
+
+    x = f"lower(trim({expr}))"
+    for pat, rep in TOKEN_RULES:
+        x = f"regexp_replace({x}, {lit(pat)}, '{rep}')"
+    x = f"translate({x}, '{ACCENT_FROM}', '{ACCENT_TO}')"
+    return f"trim(regexp_replace({x}, {lit(WHITESPACE)}, ' '))"
 
 
 def oracle_normalize(expr: str) -> str:
@@ -61,4 +81,4 @@ def oracle_normalize(expr: str) -> str:
     for pat, rep in TOKEN_RULES:
         x = f"regexp_replace({x}, '{pat}', '{rep}', 'g')"
     x = f"translate({x}, '{ACCENT_FROM}', '{ACCENT_TO}')"
-    return f"trim(regexp_replace({x}, '\\s+', ' ', 'g'))"
+    return f"trim(regexp_replace({x}, '{WHITESPACE}', ' ', 'g'))"

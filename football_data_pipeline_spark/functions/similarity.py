@@ -1,7 +1,9 @@
 """F9-F11: similarity kernels for the resolution cascade.
 
 All built-in column expressions (codegen'd, no UDF) except the
-optional difflib-parity Pandas UDF.
+optional difflib-parity Pandas UDF. The ``sql_*`` builders emit the
+same kernels as Spark SQL text for statements issued through
+``spark.sql``; the ``oracle_*`` builders emit them as DuckDB SQL.
 
 F11 decision (SURVEY.md §7 risk register): the engine's default fuzzy
 kernel is the Levenshtein RATIO (1 − lev/maxlen) — pure built-in on
@@ -75,6 +77,28 @@ def difflib_ratio(a: pd.Series, b: pd.Series) -> pd.Series:
             for x, y in zip(a.tolist(), b.tolist())
         ]
     )
+
+
+def sql_word_set(norm: str) -> str:
+    """``word_set`` as Spark SQL text."""
+    return f"array_distinct(array_remove(split({norm}, ' '), ''))"
+
+
+def sql_jaccard_from_words(aw: str, bw: str) -> str:
+    """``jaccard_from_words`` as Spark SQL text — the same operations
+    in the same order, so the doubles agree bitwise."""
+    inter = f"size(array_intersect({aw}, {bw}))"
+    union = f"size(array_union({aw}, {bw}))"
+    return (
+        f"CASE WHEN size({aw}) > 0 AND size({bw}) > 0 AND {union} > 0 "
+        f"THEN {inter} / {union} * 0.7D ELSE 0.0D END"
+    )
+
+
+def sql_levenshtein_ratio(a: str, b: str) -> str:
+    """``levenshtein_ratio`` as Spark SQL text."""
+    maxlen = f"greatest(length({a}), length({b}))"
+    return f"CASE WHEN {maxlen} > 0 THEN 1.0D - levenshtein({a}, {b}) / {maxlen} ELSE 0.0D END"
 
 
 def oracle_substring_confidence(a: str, b: str) -> str:

@@ -49,6 +49,9 @@ def rnd(col: Column, k: int = 2) -> Column:
 
 
 def oracle_rnd(expr: str, k: int = 2) -> str:
+    """``rnd`` as SQL text. The same text is valid Spark SQL and
+    plans to the same double arithmetic as ``rnd``, so SQL-built
+    engine statements use it too."""
     scale = 10**k
     return f"floor(({expr}) * {scale} + 0.5) / {scale}"
 

@@ -683,7 +683,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_dedup_pairs(spark, load(spark, sf_dir, "documents"))
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 26) -> DataFrame:
     """Min-label propagation over an undirected pair graph →
     (node, component) where component = the minimum doc_id reachable.
 

@@ -6,17 +6,29 @@ manual table (0.95), learned table (0.9), normalized equality (0.85),
 substring (≥0.75), word-Jaccard (≥0.7), fuzzy ratio (≥0.6), else fall
 back to the fuzzy attempt (match if conf ≥ 0.3).
 
-Spark re-architecture — one pass over (api × candidate) pairs,
-no per-row control flow:
-1. pair generation: broadcast the candidate universe (the reference
-   prunes it to ≤~40 names per league, enhanced_mapping.py:846-851 —
-   the blocking key keeps this tiny at any scale);
-2. score every strategy's confidence per pair (all built-ins);
-3. early-exit becomes: per api name, the chosen strategy is the FIRST
-   (by priority) whose best-over-candidates confidence clears its
-   threshold. Computed with two window expressions over the same
-   partitioning (one shuffle): min passing strategy index, then
-   row_number over (chosen-strategy confidence desc, name asc).
+Spark re-architecture — pairs instead of per-row control flow:
+candidates are broadcast on a blocking key (the reference prunes them
+to ≤~40 names per league, enhanced_mapping.py:846-851 — the key keeps
+this tiny at any scale), and the early exit becomes: per api name,
+the chosen strategy is the FIRST (by priority) whose
+best-over-candidates confidence clears its threshold. Two plans
+compute it, one per output shape:
+
+- with alternatives (the reference's full MappingResult): ONE SQL
+  statement over the blocked pairs, scored in a single pass — per-name
+  windows over one partitioning pick the first passing equality tier,
+  run the Jaccard/edit-distance kernels only for names no equality
+  tier resolved, then rank the candidates once for the winner and the
+  top-3 runners-up (plan notes on ``resolve_names``);
+- without (the fast path): equality tiers as broadcast equi-joins and
+  one packed-key hash aggregate over the fuzzy remainder
+  (``resolve_agg``) — nothing pair-sized sorts.
+
+Neither scores strategy 5 (substring): its confidence is
+(min(len)/max(len))·0.75, so it clears its 0.75 gate only on
+equal-length containment, i.e. normalized equality, which strategy 4
+resolves first at higher priority — it can never be chosen
+(tests/test_resolution.py::test_substring_tier_provably_dead).
 
 Determinism note: the reference breaks confidence ties by candidate
 list order; this engine uses candidate name ascending — deterministic
@@ -33,15 +45,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.normalize import normalize_name
-from ..functions.stable import rnd
+from ..functions.normalize import normalize_name, sql_normalize
 from ..functions.similarity import (
     difflib_ratio,
     jaccard_from_words,
     levenshtein_ratio,
+    sql_jaccard_from_words,
+    sql_levenshtein_ratio,
+    sql_word_set,
     substring_confidence,
     word_set,
 )
+from ..functions.stable import oracle_rnd, rnd
 from .upsert import upsert_replace
 
 #: (index, strategy name, early-exit threshold) — enhanced_mapping.py:340-392
@@ -85,7 +100,6 @@ def score_pairs(
     manual_col: str | None = None,
     learned_col: str | None = None,
     use_difflib: bool = False,
-    expensive: str = "compute",
 ) -> DataFrame:
     """Add normalized names + per-strategy confidence columns to an
     (api, candidate) pair DataFrame.
@@ -102,14 +116,7 @@ def score_pairs(
     ``__api_norm``/``__cand_norm``/``__api_words``/``__cand_words``
     are already present they are reused; per-pair work is then only
     equality/containment/levenshtein/array-intersect on short
-    strings — ~25× faster at 9M pairs than normalizing per pair.
-
-    ``expensive`` controls the Jaccard/edit-distance kernels (the
-    per-pair cost drivers): "compute" evaluates them, "skip" omits
-    the columns entirely (cheap-pass probing), "zero" emits literal
-    0.0 — exact for pairs whose api name is already known to resolve
-    via a cheap strategy, since strategy priority means confidences
-    of never-chosen strategies can't affect the outcome."""
+    strings — ~25× faster at 9M pairs than normalizing per pair."""
     api, cand = F.col(api_col), F.col(cand_col)
     out = pairs
     if "__api_norm" not in out.columns:
@@ -140,102 +147,14 @@ def score_pairs(
         ),
         4: F.when(an == cn, 0.85).otherwise(0.0),
         5: substring_confidence(an, cn),
-    }
-    if expensive == "compute":
-        conf[6] = jaccard_from_words(aw, cw)
+        6: jaccard_from_words(aw, cw),
         # fuzzy: similarity must clear 0.4 before scaling ×0.6
         # (enhanced_mapping.py:580-583)
-        conf[7] = F.when(fuzzy_sim > 0.4, fuzzy_sim * 0.6).otherwise(0.0)
-    elif expensive == "zero":
-        conf[6] = conf[7] = F.lit(0.0)
+        7: F.when(fuzzy_sim > 0.4, fuzzy_sim * 0.6).otherwise(0.0),
+    }
     for idx in sorted(conf):
         out = out.withColumn(f"__conf_{idx}", conf[idx].cast("double"))
-    if 7 in conf:
-        out = out.withColumn("__conf_8", F.col("__conf_7"))
-    return out
-
-
-def resolve(
-    scored: DataFrame,
-    api_col: str = "api_name",
-    cand_col: str = "odds_name",
-    with_alternatives: bool = True,
-) -> DataFrame:
-    """Collapse scored pairs to one resolution row per api name.
-
-    Output: api_col, matched_name (NULL if no match), confidence,
-    strategy ('no_match' when unresolved), plus ``alternatives`` —
-    the top-3 non-chosen candidates by chosen-strategy confidence
-    (F14, enhanced_mapping.py:584-590) — unless
-    ``with_alternatives=False``, which skips the per-partition
-    collect/sort entirely (the collapse is then two scalar window
-    passes over a slim projection).
-    """
-    # slim the shuffle: the window partitions by api name and only
-    # needs (api, cand, confidences) — norms/word arrays must not
-    # ride along
-    keep = [api_col, cand_col] + [
-        c for c in scored.columns if c.startswith("__conf_")
-    ]
-    scored = scored.select(*keep)
-    # per-pair: first strategy index this pair would satisfy
-    pass_idx = F.least(
-        *[
-            F.when(F.col(f"__conf_{i}") >= F.lit(t), F.lit(i))
-            for i, _, t in STRATEGIES
-        ]
-    )
-    w = Window.partitionBy(api_col)
-    scored = scored.withColumn("__pass_idx", pass_idx).withColumn(
-        "__s_star", F.min("__pass_idx").over(w)
-    )
-    conf_star = F.coalesce(
-        *[
-            F.when(F.col("__s_star") == i, F.col(f"__conf_{i}"))
-            for i, _, _ in STRATEGIES
-        ],
-        F.lit(0.0),
-    )
-    strategy_star = F.coalesce(
-        *[F.when(F.col("__s_star") == i, F.lit(name)) for i, name, _ in STRATEGIES],
-        F.lit("no_match"),
-    )
-    scored = scored.withColumn("__conf_star", conf_star).withColumn(
-        "__strategy", strategy_star
-    )
-    wo = Window.partitionBy(api_col).orderBy(
-        F.desc("__conf_star"), F.asc(cand_col)
-    )
-    ranked = scored.withColumn("__rn", F.row_number().over(wo))
-    matched = F.col("__s_star").isNotNull()
-    cols = [
-        F.col(api_col),
-        F.when(matched, F.col(cand_col)).alias("matched_name"),
-        F.when(matched, rnd(F.col("__conf_star"), 4)).alias("confidence"),
-        F.when(matched, F.col("__strategy")).otherwise(F.lit("no_match")).alias("strategy"),
-    ]
-    if not with_alternatives:
-        return ranked.filter(F.col("__rn") == 1).select(*cols)
-    # top-3 runners-up: collect (rank, name), sort by rank, drop the
-    # winner, take 3 — sort BEFORE slice, collect_list order is not
-    # deterministic across partitionings
-    alts = F.slice(
-        F.filter(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("__rn"), F.col(cand_col).alias("name"))
-                ).over(w)
-            ),
-            lambda s: s["__rn"] > 1,
-        ),
-        1,
-        3,
-    )
-    best = ranked.withColumn("__alts", alts).filter(F.col("__rn") == 1)
-    return best.select(
-        *cols,
-        F.transform(F.col("__alts"), lambda s: s["name"]).alias("alternatives"),
-    )
+    return out.withColumn("__conf_8", F.col("__conf_7"))
 
 
 #: packed-key layout: pass_idx (high) | quantized 1−conf | name rank
@@ -244,11 +163,23 @@ CONF_BITS = 20
 CONF_SCALE = (1 << CONF_BITS) - 1
 
 #: hard cap on the candidate universe rank_candidates will globally
-#: sort. Far above any real bookmaker/team dim (the reference's whole
-#: teams table is tens of rows) yet small enough that the deliberate
-#: single-partition window stays trivially cheap. Also the RANK_BITS
-#: packing bound: 2^30 ranks.
+#: sort and the ranked cascade will broadcast. Far above any real
+#: bookmaker/team dim (the reference's whole teams table is tens of
+#: rows) yet small enough that the deliberate single-partition window
+#: stays trivially cheap. Also the RANK_BITS packing bound: 2^30 ranks.
 MAX_RANK_CANDIDATES = 1_000_000
+
+
+def _over_cap_error(n: str, cap: int) -> str:
+    """Spark SQL ``raise_error`` for a candidate universe of ``n``
+    distinct values over ``cap`` — the one message both cascade
+    paths fail with."""
+    return (
+        "raise_error(concat('rank_candidates: candidate universe has ', "
+        f"CAST({n} AS STRING), ' distinct values, over the {cap} cap — "
+        "the cascade broadcasts and ranks a dim-sized candidate side only; "
+        "a fact-side column does not belong here'))"
+    )
 
 
 def rank_candidates(
@@ -273,23 +204,10 @@ def rank_candidates(
     """
     distinct = candidates_df.select(cand_col).distinct()
     guard = distinct.agg(F.count("*").alias("__n_cand")).select(
-        F.when(F.col("__n_cand") <= max_candidates, F.lit(1))
-        .otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "rank_candidates: candidate universe has "
-                    ),
-                    F.col("__n_cand").cast("string"),
-                    F.lit(
-                        f" distinct values, over the {max_candidates} cap — "
-                        "this operator global-sorts a dim-sized input only; "
-                        "a fact-side column does not belong here"
-                    ),
-                )
-            )
-        )
-        .alias("__guard_ok")
+        F.expr(
+            f"IF(__n_cand <= {max_candidates}, 1, "
+            f"{_over_cap_error('__n_cand', max_candidates)})"
+        ).alias("__guard_ok")
     )
     # the guard folds INTO the rank (+ 0 * guard) rather than being a
     # dropped column: Catalyst prunes unused columns, which would
@@ -319,7 +237,7 @@ def resolve_agg(
     """Sort-free collapse of scored pairs: ONE numeric hash
     aggregation.
 
-    Equivalent to the window version of ``resolve`` (minus
+    Equivalent to the ranked statement's winner (minus
     alternatives) by this invariant: the winning pair always has
     ``pass_idx == s_star``. Proof: the winner maximizes
     conf_{s_star}; any pair whose conf_{s_star} ≥ the group max ≥
@@ -340,7 +258,7 @@ def resolve_agg(
     ratios of small integers (lengths ≤ ~100, word counts ≤ ~50), so
     distinct values differ by ≥ ~1/10⁴ ≫ 2⁻²⁰; equal doubles
     quantize equal and the tie falls to name rank, exactly the
-    window version's ordering. Winner identity is decoded by joining
+    ranked statement's ordering. Winner identity is decoded by joining
     the rank back to ``ranks`` (broadcast dim); confidences are
     carried by per-strategy max() doubles, never decoded from the
     key. ``ranks`` comes from :func:`rank_candidates`; ``scored``
@@ -394,6 +312,118 @@ def resolve_agg(
     )
 
 
+def _resolve_ranked(
+    api_df: DataFrame,
+    candidates_df: DataFrame,
+    block_key: str | None,
+    manual: DataFrame | None,
+    learned: DataFrame | None,
+    use_difflib: bool,
+    api_col: str,
+    cand_col: str,
+) -> DataFrame:
+    """The ``with_alternatives=True`` cascade as ONE planned statement
+    over the blocked pairs; the plan is described on
+    ``resolve_names``."""
+    spark = api_df.sparkSession
+    views = {"api": api_df, "cands": candidates_df}
+    # equality tiers: the confidence is the constant threshold, so a
+    # pair passes exactly when its condition holds
+    eq = {1: "api = cand", 4: "an = cn"}
+    dim_cols, dim_joins, hints = "", "", ["c"]
+    for i, dim, alias in ((2, manual, "m"), (3, learned, "l")):
+        if dim is not None:
+            target = [c for c in dim.columns if c != api_col][0]
+            views[alias] = dim
+            hints.append(alias)
+            dim_cols += f", {alias}.tgt AS {alias}t"
+            dim_joins += (
+                f" LEFT JOIN (SELECT `{api_col}` AS api, `{target}` AS tgt "
+                f"FROM {{{alias}}}) {alias} ON a.api = {alias}.api"
+            )
+            eq[i] = f"cand = {alias}t"
+    thresh = {i: t for i, _, t in STRATEGIES}
+    conf = {i: f"IF({eq[i]}, {thresh[i]}D, 0.0D)" for i in eq}
+    # strategy 5 is not scored (proof in the module docstring)
+    conf.update({6: "c6", 7: "c7", 8: "c7"})
+    cheap = " ".join(f"WHEN {eq[i]} THEN {i}" for i in sorted(eq))
+    hard = " ".join(f"WHEN {conf[i]} >= {thresh[i]}D THEN {i}" for i in (6, 7, 8))
+    conf_star = " ".join(f"WHEN {i} THEN {conf[i]}" for i in sorted(conf))
+    strategy = " ".join(
+        f"WHEN {i} THEN '{name}'" for i, name, _ in STRATEGIES if i in conf
+    )
+    if use_difflib:
+        spark.udf.register("difflib_ratio", difflib_ratio)
+        sim = "difflib_ratio(an, cn)"
+    else:
+        sim = sql_levenshtein_ratio("an", "cn")
+    blk = blk_out = on_blk = ""
+    if block_key:
+        blk, blk_out = f", `{block_key}` AS blk", ", blk"
+        on_blk = "a.blk = c.blk AND "
+    parts = spark.sparkContext.defaultParallelism
+    cap = MAX_RANK_CANDIDATES
+    order = "PARTITION BY api ORDER BY conf_star DESC, cand ASC"
+    sql = f"""
+    WITH a AS (
+      SELECT /*+ REPARTITION({parts}, api) */ *, {sql_word_set("an")} AS aw
+      FROM (SELECT `{api_col}` AS api{blk}, {sql_normalize(f"`{api_col}`")} AS an
+            FROM {{api}})
+    ),
+    c AS (
+      -- the cap check folds into cand itself: a separate guard column
+      -- nothing reads would be pruned, and its raise_error with it
+      SELECT IF(n_cand <= {cap}, cand, {_over_cap_error("n_cand", cap)}) AS cand,
+             cn, {sql_word_set("cn")} AS cw, TRUE AS hit{blk_out}
+      FROM (SELECT *, max(dr) OVER () AS n_cand
+            FROM (SELECT *, dense_rank() OVER (ORDER BY cand) AS dr
+                  FROM (SELECT `{cand_col}` AS cand{blk},
+                               {sql_normalize(f"`{cand_col}`")} AS cn
+                        FROM {{cands}})))
+    ),
+    p AS (
+      SELECT /*+ BROADCAST({', '.join(hints)}) */
+             a.api, c.cand, c.hit, a.an, c.cn, a.aw, c.cw{dim_cols}
+      -- a NULL api name pairs with nothing and comes out no_match
+      FROM a{dim_joins} LEFT JOIN c ON {on_blk}a.api IS NOT NULL
+    ),
+    -- hit is NULL only on a name's padding row; it is dropped when
+    -- the name also has real pairs (a name repeated across blocks)
+    e AS (
+      SELECT *, min(cheap) OVER (PARTITION BY api) AS easy,
+             count(hit) OVER (PARTITION BY api) AS n_hit
+      FROM (SELECT *, CASE {cheap} END AS cheap FROM p)
+    ),
+    k AS (
+      SELECT *, CASE WHEN sim > 0.4D THEN sim * 0.6D ELSE 0.0D END AS c7
+      FROM (SELECT *,
+                   CASE WHEN easy IS NULL THEN {sql_jaccard_from_words("aw", "cw")} END AS c6,
+                   CASE WHEN easy IS NULL THEN {sim} END AS sim
+            FROM e WHERE hit OR n_hit = 0)
+    ),
+    s AS (
+      SELECT *, coalesce(easy, min(hard) OVER (PARTITION BY api)) AS s_star
+      FROM (SELECT *, CASE {hard} END AS hard FROM k)
+    ),
+    r AS (
+      SELECT api, cand, s_star, CASE s_star {conf_star} ELSE 0.0D END AS conf_star FROM s
+    )
+    -- struct(cand) keeps NULL candidate names, which collect_list skips
+    SELECT api AS `{api_col}`,
+           IF(s_star IS NULL, NULL, cand) AS matched_name,
+           IF(s_star IS NULL, NULL, {oracle_rnd("conf_star", 4)}) AS confidence,
+           CASE s_star {strategy} ELSE 'no_match' END AS strategy,
+           alternatives
+    FROM (SELECT *, row_number() OVER ({order}) AS rn,
+                 transform(collect_list(struct(cand)) OVER (
+                     {order} ROWS BETWEEN 1 FOLLOWING AND 3 FOLLOWING),
+                   x -> x.cand) AS alternatives
+          FROM r)
+    WHERE rn = 1
+    """
+    return spark.sql(sql, **views)
+
+
 def resolve_names(
     api_df: DataFrame,
     candidates_df: DataFrame,
@@ -406,24 +436,38 @@ def resolve_names(
     with_alternatives: bool = True,
 ) -> DataFrame:
     """End-to-end cascade: pair generation (blocked, candidates
-    broadcast) → two-pass scoring → collapse.
+    broadcast) → scoring → one row per distinct api name.
 
     ``manual``/``learned`` are mapping dims with columns
     (api_col, target name) — F7's dictionary strategies
     (/root/reference/enhanced_mapping.py:111-179,194-214).
 
-    Plan shape (the reference's early-exit cascade, set-oriented —
-    SURVEY.md §4.2):
-    1. normalization + word-split computed ONCE per input row,
-       before the pair join;
-    2. cheap pass: strategies 1-5 over all pairs, aggregated to a
-       per-name verdict (map-side-combinable ``min`` — the shuffle
-       carries one row per name, never the pair stream);
-    3. expensive Jaccard/edit-distance kernels run ONLY on pairs of
-       names the cheap pass could not resolve (broadcast anti-join);
-       resolved names take literal-0 expensive confidences, which is
-       exact because a never-chosen strategy's confidence can't
-       affect the outcome (strategy priority).
+    Plan shape with alternatives — one ``spark.sql`` statement over
+    the inputs as temp views, so the driver parses and analyses ONE
+    plan per batch instead of growing it column by column:
+    1. each side is normalized and word-split ONCE per input row. The
+       api side is hash-repartitioned by name (rationale at the fast
+       path's repartition below: per-row materialization, and every
+       per-name window then runs in that partitioning — the pair
+       stream never shuffles). Manual/learned targets LEFT-join onto
+       the api side, then the candidates broadcast-LEFT-join on the
+       block key: a name with no candidates keeps one padding row and
+       comes out ``no_match`` with ``[]`` alternatives.
+    2. the equality tiers 1-4 give each pair its first passing index;
+       ``easy`` is the per-name minimum.
+    3. Jaccard and Levenshtein run under ``CASE WHEN easy IS NULL`` —
+       codegen evaluates only the taken branch, so the kernels run
+       only for names no equality tier resolved (exact: a never-chosen
+       strategy cannot change the outcome). ``s_star`` =
+       coalesce(easy, per-name minimum of the 6-8 pass index): the
+       NAME-level choice, and every pair is ranked by its confidence
+       under that one strategy.
+    4. one ordered window (confidence desc, name asc): row 1 is the
+       winner, its next three rows the alternatives.
+    The candidate-cap guard is folded into the broadcast candidate
+    side (one single-partition window over the dim), so an over-cap
+    universe fails the job with the ``rank_candidates`` error.
+    Strategy 5 is not scored (module docstring).
 
     (The r13 ``hard_fallback`` seam — reuse a prior batch's rows for
     equality-unresolved names — was removed in r14: its one shipped
@@ -431,6 +475,11 @@ def resolve_names(
     a pure projection of batch 1; the equivalence proof lives on
     er_queries.q_learned_mapping.)
     """
+    if with_alternatives:
+        return _resolve_ranked(
+            api_df, candidates_df, block_key, manual, learned,
+            use_difflib, api_col, cand_col,
+        )
     # The repartition is load-bearing twice over: (a) whole-stage
     # codegen evaluates ProjectExec output lazily at first USE site,
     # which for these columns would be inside the pair-join's match
@@ -479,210 +528,160 @@ def resolve_names(
     else:
         pairs = api_df.crossJoin(F.broadcast(candidates_df))
 
-    def score(df: DataFrame, expensive: str) -> DataFrame:
-        return score_pairs(
-            df,
+    # fast path — two tiers, each scanning only the remainder:
+    #
+    # Tier A: strategies 1-4 are pure EQUALITY conditions (exact
+    # name, manual target, learned target, normalized name), so
+    # they are broadcast equi-JOINS against the candidate dim —
+    # one hash probe per input row, and the pair stream for these
+    # strategies is never materialized at all. Confidence is a
+    # constant per strategy, so the argmin key needs no conf
+    # field: min(strategy_idx ≪ RANK_BITS | name_rank) IS the
+    # cascade order (priority, then name asc).
+    #
+    # Tier B: substring/Jaccard/Levenshtein kernels in ONE pair
+    # pass over the remainder (strategy 5 provably never fires —
+    # see the note at the hard tier below — so there is no
+    # separate substring tier; r13 opt round removed it).
+    #
+    # At sf0.1 (600-candidate blocks) tier A measures even with
+    # a flat cheap-scan — the fuzzy remainder dominates. The tier
+    # structure is kept for its asymptotics: dictionary strategies
+    # cost one probe per input ROW, not |block| comparisons per
+    # row, which is the difference that matters when blocks are
+    # thousands wide.
+    # r14 probe, REVERTED: a single-pass tier A (pre-aggregate the
+    # candidate dim to per-key min ranks, LEFT-probe all four
+    # strategy keys on one stream, least() the packed keys, derive
+    # the remainder from the same pass's NULL keys) produced a
+    # structurally smaller plan (q_fuzzy_join 248 → 150 Exchange
+    # prints, 110 → 62 scans) but LOST wall-clock in every leg of
+    # a 3-leg stash-toggled ABAB at sf0.1 (medians 6.65/3.87/4.26
+    # vs 4.25/3.20/3.38 s) — the four independent inner-join
+    # subtrees overlap on idle cores while the chained left-probes
+    # serialize one stream behind two dim aggregates (the same
+    # overlap-beats-fewer-passes lesson as the r13 bm25
+    # postings-cache and wider-minhash-cache A/Bs).
+    a, c = api_df.alias("A"), candidates_df.alias("C")
+    blk = (
+        [F.col(f"A.{block_key}") == F.col(f"C.{block_key}")] if block_key else []
+    )
+    equi_specs = [(1, F.col(f"A.{api_col}"), F.col(f"C.{cand_col}"))]
+    if manual_col:
+        equi_specs.append((2, F.col(f"A.{manual_col}"), F.col(f"C.{cand_col}")))
+    if learned_col:
+        equi_specs.append((3, F.col(f"A.{learned_col}"), F.col(f"C.{cand_col}")))
+    equi_specs.append((4, F.col("A.__api_norm"), F.col("C.__cand_norm")))
+    tiers = [
+        a.join(
+            F.broadcast(c),
+            reduce_and(blk + [left == right]),
+            "inner",
+        ).select(
+            F.col(f"A.{api_col}").alias(api_col),
+            (
+                F.shiftleft(F.lit(i).cast("long"), RANK_BITS)
+                + F.col("C.__cand_rank")
+            ).alias("__key"),
+        )
+        for i, left, right in equi_specs
+    ]
+    equi_all = tiers[0]
+    for t in tiers[1:]:
+        equi_all = equi_all.unionByName(t)
+    eq_agg = equi_all.groupBy(api_col).agg(F.min("__key").alias("__key"))
+    s_star = F.shiftright(F.col("__key"), RANK_BITS).cast("int")
+    conf_of = {i: conf for i, _, conf in STRATEGIES}
+    easy_a = (
+        eq_agg.withColumn(
+            "__cand_rank", F.col("__key").bitwiseAND(F.lit((1 << RANK_BITS) - 1))
+        )
+        .join(F.broadcast(ranks), "__cand_rank")
+        .select(
+            F.col(api_col),
+            F.col(cand_col).alias("matched_name"),
+            rnd(
+                F.coalesce(
+                    *[
+                        F.when(s_star == i, F.lit(conf_of[i]))
+                        for i, _, _ in equi_specs
+                    ]
+                ),
+                4,
+            ).alias("confidence"),
+            F.coalesce(
+                *[
+                    F.when(s_star == i, F.lit(name))
+                    for i, name, _ in STRATEGIES
+                    if i in {j for j, _, _ in equi_specs}
+                ]
+            ).alias("strategy"),
+        )
+    )
+    # cache the per-name verdicts (dim-sized): the two consumers
+    # (the union output and the remainder anti-join) would
+    # otherwise re-run the tier's whole subtree per reference.
+    # Lifecycle: the returned plan references these cached
+    # frames, so they stay pinned for the session (a dim-sized
+    # cost) — a long-lived driver running the cascade repeatedly
+    # should spark.catalog.clearCache() between corpora or
+    # materialize the result and unpersist (the phash_near_dup
+    # pattern)
+    easy_a = easy_a.cache()
+    all_names = api_df.select(api_col).distinct()
+    rest_a = all_names.join(
+        F.broadcast(easy_a.select(api_col)), api_col, "left_anti"
+    )
+    # There is deliberately NO separate substring tier (r13 opt
+    # round removed it as provably dead work): strategy 5's
+    # confidence is (min(len)/max(len))·0.75 ≤ 0.75 with equality
+    # iff the lengths match, and containment of equal-length
+    # strings IS string equality — so a pair can clear the 0.75
+    # gate only when __api_norm == __cand_norm, which strategy 4
+    # (normalized equality, higher priority, threshold 0.85 = its
+    # own constant confidence) already resolved in tier A. The old
+    # tier A' therefore always produced an EMPTY verdict set while
+    # paying a full pair-stream pass + cache + anti-join
+    # (tests/test_resolution.py::test_substring_tier_provably_dead
+    # pins the arithmetic fact; the fast-vs-window parity test
+    # pins end-to-end equality).
+    #
+    # The same tier-A-completeness argument bounds the remainder's
+    # pass_idx to {6, 7, 8, NULL} — a rest_a pair passing 1-4
+    # would have resolved its name in tier A, and 5 is impossible
+    # as above — so the aggregate runs over STRATEGIES[5:] only
+    # and Catalyst prunes the never-read cheap confidence columns
+    # out of the pair projection.
+    #
+    # No pass_idx pre-filter here, deliberately: the 0.3 fallback
+    # admits nearly every pair, so a filter would drop nothing
+    # while inlining the Levenshtein/Jaccard kernels a second
+    # time into the Filter node (measured 2× kernel cost in the
+    # physical plan). resolve_agg yields null-key groups →
+    # 'no_match' rows for names nothing matches.
+    hard_names = rest_a
+    hard_pairs = pairs.join(F.broadcast(hard_names), api_col, "inner")
+    hard_agg = resolve_agg(
+        score_pairs(
+            hard_pairs,
             api_col=api_col,
             cand_col=cand_col,
             manual_col=manual_col,
             learned_col=learned_col,
             use_difflib=use_difflib,
-            expensive=expensive,
-        )
-
-    if not with_alternatives:
-        # fast path — two tiers, each scanning only the remainder:
-        #
-        # Tier A: strategies 1-4 are pure EQUALITY conditions (exact
-        # name, manual target, learned target, normalized name), so
-        # they are broadcast equi-JOINS against the candidate dim —
-        # one hash probe per input row, and the pair stream for these
-        # strategies is never materialized at all. Confidence is a
-        # constant per strategy, so the argmin key needs no conf
-        # field: min(strategy_idx ≪ RANK_BITS | name_rank) IS the
-        # cascade order (priority, then name asc).
-        #
-        # Tier B: substring/Jaccard/Levenshtein kernels in ONE pair
-        # pass over the remainder (strategy 5 provably never fires —
-        # see the note at the hard tier below — so there is no
-        # separate substring tier; r13 opt round removed it).
-        #
-        # At sf0.1 (600-candidate blocks) tier A measures even with
-        # a flat cheap-scan — the fuzzy remainder dominates. The tier
-        # structure is kept for its asymptotics: dictionary strategies
-        # cost one probe per input ROW, not |block| comparisons per
-        # row, which is the difference that matters when blocks are
-        # thousands wide.
-        # r14 probe, REVERTED: a single-pass tier A (pre-aggregate the
-        # candidate dim to per-key min ranks, LEFT-probe all four
-        # strategy keys on one stream, least() the packed keys, derive
-        # the remainder from the same pass's NULL keys) produced a
-        # structurally smaller plan (q_fuzzy_join 248 → 150 Exchange
-        # prints, 110 → 62 scans) but LOST wall-clock in every leg of
-        # a 3-leg stash-toggled ABAB at sf0.1 (medians 6.65/3.87/4.26
-        # vs 4.25/3.20/3.38 s) — the four independent inner-join
-        # subtrees overlap on idle cores while the chained left-probes
-        # serialize one stream behind two dim aggregates (the same
-        # overlap-beats-fewer-passes lesson as the r13 bm25
-        # postings-cache and wider-minhash-cache A/Bs).
-        a, c = api_df.alias("A"), candidates_df.alias("C")
-        blk = (
-            [F.col(f"A.{block_key}") == F.col(f"C.{block_key}")] if block_key else []
-        )
-        equi_specs = [(1, F.col(f"A.{api_col}"), F.col(f"C.{cand_col}"))]
-        if manual_col:
-            equi_specs.append((2, F.col(f"A.{manual_col}"), F.col(f"C.{cand_col}")))
-        if learned_col:
-            equi_specs.append((3, F.col(f"A.{learned_col}"), F.col(f"C.{cand_col}")))
-        equi_specs.append((4, F.col("A.__api_norm"), F.col("C.__cand_norm")))
-        tiers = [
-            a.join(
-                F.broadcast(c),
-                reduce_and(blk + [left == right]),
-                "inner",
-            ).select(
-                F.col(f"A.{api_col}").alias(api_col),
-                (
-                    F.shiftleft(F.lit(i).cast("long"), RANK_BITS)
-                    + F.col("C.__cand_rank")
-                ).alias("__key"),
-            )
-            for i, left, right in equi_specs
-        ]
-        equi_all = tiers[0]
-        for t in tiers[1:]:
-            equi_all = equi_all.unionByName(t)
-        eq_agg = equi_all.groupBy(api_col).agg(F.min("__key").alias("__key"))
-        s_star = F.shiftright(F.col("__key"), RANK_BITS).cast("int")
-        conf_of = {i: conf for i, _, conf in STRATEGIES}
-        easy_a = (
-            eq_agg.withColumn(
-                "__cand_rank", F.col("__key").bitwiseAND(F.lit((1 << RANK_BITS) - 1))
-            )
-            .join(F.broadcast(ranks), "__cand_rank")
-            .select(
-                F.col(api_col),
-                F.col(cand_col).alias("matched_name"),
-                rnd(
-                    F.coalesce(
-                        *[
-                            F.when(s_star == i, F.lit(conf_of[i]))
-                            for i, _, _ in equi_specs
-                        ]
-                    ),
-                    4,
-                ).alias("confidence"),
-                F.coalesce(
-                    *[
-                        F.when(s_star == i, F.lit(name))
-                        for i, name, _ in STRATEGIES
-                        if i in {j for j, _, _ in equi_specs}
-                    ]
-                ).alias("strategy"),
-            )
-        )
-        # cache the per-name verdicts (dim-sized): the two consumers
-        # (the union output and the remainder anti-join) would
-        # otherwise re-run the tier's whole subtree per reference.
-        # Lifecycle: the returned plan references these cached
-        # frames, so they stay pinned for the session (a dim-sized
-        # cost) — a long-lived driver running the cascade repeatedly
-        # should spark.catalog.clearCache() between corpora or
-        # materialize the result and unpersist (the phash_near_dup
-        # pattern)
-        easy_a = easy_a.cache()
-        all_names = api_df.select(api_col).distinct()
-        rest_a = all_names.join(
-            F.broadcast(easy_a.select(api_col)), api_col, "left_anti"
-        )
-        # There is deliberately NO separate substring tier (r13 opt
-        # round removed it as provably dead work): strategy 5's
-        # confidence is (min(len)/max(len))·0.75 ≤ 0.75 with equality
-        # iff the lengths match, and containment of equal-length
-        # strings IS string equality — so a pair can clear the 0.75
-        # gate only when __api_norm == __cand_norm, which strategy 4
-        # (normalized equality, higher priority, threshold 0.85 = its
-        # own constant confidence) already resolved in tier A. The old
-        # tier A' therefore always produced an EMPTY verdict set while
-        # paying a full pair-stream pass + cache + anti-join
-        # (tests/test_resolution.py::test_substring_tier_provably_dead
-        # pins the arithmetic fact; the fast-vs-window parity test
-        # pins end-to-end equality).
-        #
-        # The same tier-A-completeness argument bounds the remainder's
-        # pass_idx to {6, 7, 8, NULL} — a rest_a pair passing 1-4
-        # would have resolved its name in tier A, and 5 is impossible
-        # as above — so the aggregate runs over STRATEGIES[5:] only
-        # and Catalyst prunes the never-read cheap confidence columns
-        # out of the pair projection.
-        #
-        # No pass_idx pre-filter here, deliberately: the 0.3 fallback
-        # admits nearly every pair, so a filter would drop nothing
-        # while inlining the Levenshtein/Jaccard kernels a second
-        # time into the Filter node (measured 2× kernel cost in the
-        # physical plan). resolve_agg yields null-key groups →
-        # 'no_match' rows for names nothing matches.
-        hard_names = rest_a
-        hard_pairs = pairs.join(F.broadcast(hard_names), api_col, "inner")
-        hard_agg = resolve_agg(
-            score(hard_pairs, expensive="compute"),
-            ranks,
-            api_col=api_col,
-            cand_col=cand_col,
-            strategies=STRATEGIES[5:],
-        )
-        hard_out = hard_names.join(hard_agg, api_col, "left").select(
-            F.col(api_col),
-            F.col("matched_name"),
-            F.col("confidence"),
-            F.coalesce(F.col("strategy"), F.lit("no_match")).alias("strategy"),
-        )
-        return easy_a.unionByName(hard_out)
-
-    # alternatives require a full ranking per name → window path;
-    # same two-pass split so the ranking sorts stay cheap-kernel
-    cheap_pass_idx = F.least(
-        *[
-            F.when(F.col(f"__conf_{i}") >= F.lit(t), F.lit(i))
-            for i, _, t in CHEAP_STRATEGIES
-        ]
-    )
-    easy_names = (
-        score(pairs, expensive="skip")
-        .select(F.col(api_col), cheap_pass_idx.alias("__p"))
-        .groupBy(api_col)
-        .agg(F.min("__p").alias("__p"))
-        .filter(F.col("__p").isNotNull())
-        .select(api_col)
-    )
-    easy = pairs.join(F.broadcast(easy_names), api_col, "inner")
-    hard = pairs.join(F.broadcast(easy_names), api_col, "left_anti")
-    out_easy = resolve(
-        score(easy, expensive="zero"),
+        ),
+        ranks,
         api_col=api_col,
         cand_col=cand_col,
+        strategies=STRATEGIES[5:],
     )
-    out_hard = resolve(
-        score(hard, expensive="compute"),
-        api_col=api_col,
-        cand_col=cand_col,
-    )
-    out = out_easy.unionByName(out_hard)
-    # contract: one MappingResult per input name, matching the
-    # reference (enhanced_mapping.py:325-392 always returns) and the
-    # with_alternatives=False path. A name whose block yields ZERO
-    # candidate pairs never enters the window path, so reinstate it
-    # as an explicit no_match row with an empty alternatives list.
-    all_names = api_df.select(api_col).distinct()
-    return all_names.join(out, api_col, "left").select(
+    hard_out = hard_names.join(hard_agg, api_col, "left").select(
         F.col(api_col),
         F.col("matched_name"),
         F.col("confidence"),
         F.coalesce(F.col("strategy"), F.lit("no_match")).alias("strategy"),
-        F.coalesce(F.col("alternatives"), F.array().cast("array<string>")).alias(
-            "alternatives"
-        ),
     )
+    return easy_a.unionByName(hard_out)
 
 
 def learn_mappings(

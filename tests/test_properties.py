@@ -582,3 +582,26 @@ def test_connected_components_path_graph_converges_early(spark):
     got = {r.doc_id: (r.component, r.component_size) for r in
            connected_components(pairs, max_iter=8).collect()}
     assert got == {i: (0, 13) for i in range(13)}
+
+
+
+def test_connected_components_counts_the_confirming_round(spark):
+    """max_iter counts the round that CONFIRMS convergence, which the
+    consecutive-propagate probe can reach one round after the labels
+    settle — the reason the default is 26, not 25. This 8-node path's
+    id order defeats pointer jumping (found by exhaustive search over
+    orders), so it needs all 8 rounds: it converges at max_iter=8 and
+    raises at 7."""
+    import pytest as _pytest
+
+    from football_data_pipeline_spark.operators.dedup import connected_components
+
+    path = [0, 3, 2, 5, 6, 4, 1, 7]
+    pairs = spark.createDataFrame(
+        list(zip(path, path[1:])), "doc_a long, doc_b long"
+    )
+    got = {r.doc_id: (r.component, r.component_size) for r in
+           connected_components(pairs, max_iter=8).collect()}
+    assert got == {i: (0, 8) for i in range(8)}
+    with _pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(pairs, max_iter=7)

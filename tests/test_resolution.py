@@ -11,7 +11,10 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from football_data_pipeline_spark.functions.normalize import normalize_name
+from football_data_pipeline_spark.functions.normalize import (
+    normalize_name,
+    sql_normalize,
+)
 from football_data_pipeline_spark.operators.resolution import (
     attempt_log,
     learn_mappings,
@@ -72,6 +75,39 @@ def test_normalization_examples(spark):
         "tottenham and co",
         "barcelona",
     ]
+
+
+def test_sql_normalize_matches_column_chain(spark):
+    """The Spark-SQL text chain equals the Column chain row for row —
+    both are generated from the same rule tables, and the SQL text
+    must survive the parser's backslash unescaping."""
+    names = [
+        "Manchester United FC",
+        "AFC Bournemouth",
+        "CF Montréal",
+        "Real Madrid CF",
+        "FC",
+        "Brighton & Hove Albion",
+        "Atlético   Madrid",
+        "  Olympique   de Marseille  ",
+        "SPORTING Clube",
+        "Tottenham Hotspur",
+        "ÉCOLE Ñandú",
+        "",
+        None,
+    ]
+    df = spark.createDataFrame([(n,) for n in names], "name string")
+    rows = df.select(
+        normalize_name("name").alias("col"),
+        F.expr(sql_normalize("name")).alias("sql"),
+    ).collect()
+    assert [r.sql for r in rows] == [r.col for r in rows]
+    by_name = dict(zip(names, (r.sql for r in rows)))
+    assert by_name["Manchester United FC"] == "manchester utd"
+    assert by_name["AFC Bournemouth"] == "afc bournemouth"
+    assert by_name["Brighton & Hove Albion"] == "brighton and hove albion"
+    assert by_name["Atlético   Madrid"] == "atletico madrid"
+    assert by_name[""] == ""
 
 
 def test_cascade_reference_cases_levenshtein(spark):
@@ -346,3 +382,158 @@ def test_learned_mapping_plan_bounded(spark):
         f"q_learned_mapping plan has {n_exchanges} Exchange prints - "
         "batch 1 lineage re-embedded? (localCheckpoint cut missing)"
     )
+
+
+#: (name, league) for the blocked tests; league 3 has no candidates
+BLOCKED_CANDIDATES = [
+    ("Manchester Utd", 1),
+    ("Manchester City", 1),
+    ("Liverpool", 1),
+    ("Everton", 1),
+    ("Gamma", 1),
+    ("Gamma FC", 1),
+    ("Real Madrid", 2),
+    ("Atletico Madrid", 2),
+    ("Barcelona", 2),
+    ("Sevilla", 2),
+    ("Valencia", 2),
+    ("Real Betis", 2),
+]
+
+
+def _levenshtein(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def _fuzzy_conf(a: str, b: str) -> float:
+    """Strategy 7/8's confidence for names the normalization rules
+    leave as lowercase (no affixes, accents or '&')."""
+    a, b = a.lower(), b.lower()
+    sim = 1.0 - _levenshtein(a, b) / max(len(a), len(b))
+    return sim * 0.6 if sim > 0.4 else 0.0
+
+
+def test_blocked_alternatives_with_learned_dim_match_fast_path(spark):
+    """The benchmark's call shape — with_alternatives=True, a block
+    key and an active learned dim — against the fast path, across a
+    learn_mappings round trip. Covers a league with no candidates, a
+    normalized-equality tie broken by name ascending, and a
+    fallback-only match whose alternatives are checked against a
+    pure-Python ranking."""
+    api = spark.createDataFrame(
+        [
+            ("Manchester United", 1),  # normalized → learned next batch
+            ("Liverpool", 1),  # exact, stays exact
+            ("Gamma CF", 1),  # tie: Gamma / Gamma FC both normalize to gamma
+            ("Madrid Real", 2),  # word-based 0.7, not learned
+            ("Real Sevilla", 2),  # fuzzy fallback only
+            ("Lonely Town", 3),  # league without candidates
+        ],
+        "api_name string, league long",
+    )
+    cand = spark.createDataFrame(BLOCKED_CANDIDATES, "odds_name string, league long")
+    empty = spark.createDataFrame(
+        [],
+        "api_name string, learned_name string, confidence double, "
+        "strategy string, verified boolean",
+    )
+
+    def both(learned):
+        dim = learned.select("api_name", "learned_name")
+        ranked = resolve_names(api, cand, block_key="league", learned=dim)
+        fast = resolve_names(
+            api, cand, block_key="league", learned=dim, with_alternatives=False
+        )
+        rows = {r.api_name: r for r in ranked.collect()}
+        assert sorted(tuple(r)[:4] for r in rows.values()) == sorted(
+            map(tuple, fast.collect())
+        )
+        return rows
+
+    first = both(empty)
+    assert len(first) == 6
+    lonely = first["Lonely Town"]
+    assert (lonely.matched_name, lonely.strategy, lonely.alternatives) == (
+        None,
+        "no_match",
+        [],
+    )
+    gamma = first["Gamma CF"]
+    assert (gamma.matched_name, gamma.strategy, gamma.confidence) == (
+        "Gamma",
+        "normalized_matching",
+        0.85,
+    )
+    assert gamma.alternatives[0] == "Gamma FC"
+    assert first["Madrid Real"].strategy == "word_based_matching"
+    fallback = first["Real Sevilla"]
+    ranking = sorted(
+        (-_fuzzy_conf("Real Sevilla", n), n) for n, lg in BLOCKED_CANDIDATES if lg == 2
+    )
+    assert fallback.strategy == "fuzzy_matching"
+    assert 0.3 <= fallback.confidence < 0.6
+    assert fallback.confidence == pytest.approx(-ranking[0][0], abs=1e-4)
+    assert fallback.matched_name == ranking[0][1]
+    assert fallback.alternatives == [n for _, n in ranking[1:4]]
+
+    resolved = spark.createDataFrame(
+        [(r.api_name, r.matched_name, r.confidence, r.strategy) for r in first.values()],
+        "api_name string, matched_name string, confidence double, strategy string",
+    )
+    second = both(learn_mappings(resolved, empty).localCheckpoint())
+    for name in ("Manchester United", "Gamma CF"):
+        r = second[name]
+        assert (r.matched_name, r.strategy, r.confidence) == (
+            first[name].matched_name,
+            "learned_mapping",
+            0.9,
+        )
+    assert second["Liverpool"].strategy == "exact_match"
+    assert second["Lonely Town"].alternatives == []
+
+
+def test_ranked_statement_plan_shape(spark, monkeypatch):
+    """Plan-shape regression guard for the with_alternatives=True
+    statement on a blocked 40-name batch: a bounded number of Spark
+    jobs, ONE broadcast join on the block key (the pair stream is
+    built once and scored in one pass), one hash exchange (the api
+    side's repartition: the pair stream never shuffles), and the
+    candidate-cap guard still fails the job."""
+    import football_data_pipeline_spark.operators.resolution as resolution
+
+    api = spark.createDataFrame(
+        [(f"{n} {sfx}", lg) for n, lg in BLOCKED_CANDIDATES for sfx in ("FC", "Town", "X")]
+        + [(n, lg) for n, lg in BLOCKED_CANDIDATES[:4]],
+        "api_name string, league long",
+    )
+    assert api.count() == 40
+    cand = spark.createDataFrame(BLOCKED_CANDIDATES, "odds_name string, league long")
+    learned = spark.createDataFrame(
+        [("Everton Town", "Everton")], "api_name string, learned_name string"
+    )
+    out = resolve_names(api, cand, block_key="league", learned=learned)
+    sc = spark.sparkContext
+    sc.setJobGroup("ranked-plan-shape", "plan shape")
+    try:
+        assert len(out.collect()) == 40
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("ranked-plan-shape")) <= 6
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    pair_joins = [
+        line for line in final.splitlines()
+        if "BroadcastHashJoin [blk" in line
+    ]
+    assert len(pair_joins) == 1, final
+    assert final.count("Exchange hashpartitioning") == 1, final
+
+    monkeypatch.setattr(resolution, "MAX_RANK_CANDIDATES", 5)
+    with pytest.raises(Exception, match="rank_candidates.*over the 5 cap"):
+        resolve_names(api, cand, block_key="league", learned=learned).collect()
